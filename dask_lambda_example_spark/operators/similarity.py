@@ -492,6 +492,87 @@ def _ivf_search_oracle(n_probe_cells: int = 1,
     """
 
 
+def _cell_centroids(corpus: DataFrame):
+    """(cen, cnorm): the coarse index built from ``corpus`` — per-(label,
+    pos) centroid values ``cval`` and per-label centroid norms ``cn``.
+    Tiny (n_cells × dim and n_cells rows), so broadcast material.
+    Callers: ``_ivf_search_impl`` (whole table) and the incremental
+    family (``sim_ivf_incremental_ingest``, ``sim_ivf_incremental_recall``,
+    ``_ingest_rerank_shortlist``; corpus only, the frozen index)."""
+    cexpl = corpus.select(
+        "label", F.posexplode("emb").alias("pos0", "val")).select(
+        "label", (F.col("pos0") + 1).alias("pos"), "val")
+    cen = cexpl.groupBy("label", "pos").agg(F.avg("val").alias("cval"))
+    cnorm = cen.groupBy("label").agg(
+        F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("cn"))
+    return cen, cnorm
+
+
+def _assign_cells(vecs: DataFrame, cen: DataFrame, cnorm: DataFrame,
+                  n_cells: int, adapt_margin: float | None = None
+                  ) -> DataFrame:
+    """Top-``n_cells`` coarse-cell assignment by cosine against the
+    broadcast centroids of ``_cell_centroids``: (vec_id, label, ccos),
+    ties broken by the lower label. With ``adapt_margin`` set, only
+    cells whose cosine is within that margin of the vector's best cell
+    are kept (the adaptive probe dial). The one cosine assignment of
+    the IVF family: ``_ivf_search_impl`` (probes) and the incremental
+    family (ingest batch and probes) call it.
+
+    The norm table is |vecs|-sized and joins on vec_id WITHOUT a
+    broadcast hint: for a probe set it is tiny anyway (AQE broadcasts
+    it), for a 100 TB ingest batch it must never pin executor memory —
+    only the n_cells-sized index tables broadcast."""
+    vexpl = vecs.select(
+        "vec_id", F.posexplode("emb").alias("pos0", "val")).select(
+        "vec_id", (F.col("pos0") + 1).alias("pos"), "val")
+    vnorm = vexpl.groupBy("vec_id").agg(
+        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("vn"))
+    vpc = (vexpl.join(F.broadcast(cen), "pos")
+           .groupBy("vec_id", "label")
+           .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
+           .join(vnorm, "vec_id")
+           .join(F.broadcast(cnorm), "label")
+           .select("vec_id", "label",
+                   (F.col("dot") / (F.col("vn") * F.col("cn")))
+                    .alias("ccos")))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("label"))
+    ranked = vpc.withColumn("rn", F.row_number().over(w))
+    keep = F.col("rn") <= n_cells
+    if adapt_margin is not None:
+        ranked = ranked.withColumn(
+            "best", F.max("ccos").over(Window.partitionBy("vec_id")))
+        keep = keep & (F.col("ccos") >= F.col("best") - F.lit(adapt_margin))
+    return ranked.filter(keep).select("vec_id", "label", "ccos")
+
+
+def _cell_topk(probes: DataFrame, assigned: DataFrame, cells: DataFrame,
+               k: int) -> DataFrame:
+    """Exact cosine top-``k`` of each probe (vec_id, emb) within its
+    ``assigned`` cells (vec_id, label) of ``cells`` (vec_id, label,
+    emb): (query_id, neighbor_id, cos, rank), ties broken by the lower
+    neighbor_id. The probe side broadcasts; the scan is one equi-join
+    on the cell label. Callers: ``_ivf_search_impl`` and
+    ``sim_ivf_incremental_recall``."""
+    q = (F.broadcast(probes.join(assigned.select("vec_id", "label"),
+                                 "vec_id"))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("label").alias("cell"),
+                 F.col("emb").alias("qemb"),
+                 l2norm(F.col("emb")).alias("qnrm")))
+    c = cells.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
+    scored = (
+        q.join(c, (F.col("c.label") == F.col("cell"))
+               & (F.col("c.vec_id") != F.col("query_id")))
+        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
+                cosine_pair(F.col("qemb"), F.col("c.emb"),
+                            F.col("qnrm"), F.col("c.nrm")).alias("cos")))
+    wrank = Window.partitionBy("query_id").orderBy(F.desc("cos"),
+                                                   F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(wrank))
+            .filter(F.col("rank") <= k))
+
+
 def _ivf_search_impl(spark: SparkSession, sf_dir: str,
                      n_probe_cells: int, k: int = IVF_K,
                      adapt_margin: float | None = None) -> DataFrame:
@@ -501,61 +582,12 @@ def _ivf_search_impl(spark: SparkSession, sf_dir: str,
     top-k within those cells only."""
     e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
-    expl = e.select(
-        "vec_id", "label",
-        F.posexplode("emb").alias("pos0", "val")).select(
-        "vec_id", "label", (F.col("pos0") + 1).alias("pos"), "val")
-
-    cen = expl.groupBy("label", "pos").agg(F.avg("val").alias("cval"))
-    cnorm = cen.groupBy("label").agg(
-        F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("nrm"))
-
-    probes = e.filter(_probe_filter())
-    pexpl = expl.filter(_probe_filter()).drop("label")
-    pnorm = pexpl.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
-
-    pc = (
-        pexpl.join(F.broadcast(cen), "pos")
-        .groupBy("vec_id", "label")
-        .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
-        .join(F.broadcast(pnorm.withColumnRenamed("nrm", "pn")), "vec_id")
-        .join(F.broadcast(cnorm.withColumnRenamed("nrm", "cn")), "label")
-        .select("vec_id", "label",
-                (F.col("dot") / (F.col("pn") * F.col("cn"))).alias("ccos"))
-    )
-    wassign = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("label"))
-    keep = F.col("rn") <= n_probe_cells
-    if adapt_margin is not None:
-        keep = keep & (F.col("ccos")
-                       >= F.col("best") - F.lit(adapt_margin))
-    assigned = (pc.withColumn("rn", F.row_number().over(wassign))
-                .withColumn("best", F.max("ccos").over(
-                    Window.partitionBy("vec_id")))
-                .filter(keep)
-                .select("vec_id", "label"))
-
-    q = (F.broadcast(probes.select("vec_id", "emb").join(assigned, "vec_id"))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("label").alias("cell"),
-                 F.col("emb").alias("qemb"),
-                 l2norm(F.col("emb")).alias("qnrm")))
-    c = e.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
-    scored = (
-        q.join(c, (F.col("c.label") == F.col("cell"))
-               & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine_pair(F.col("qemb"), F.col("c.emb"),
-                            F.col("qnrm"), F.col("c.nrm")).alias("cos"))
-    )
-    wrank = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                                   F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wrank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-                "rank")
-    )
+    cen, cnorm = _cell_centroids(e)
+    probes = e.filter(_probe_filter()).select("vec_id", "emb")
+    assigned = _assign_cells(probes, cen, cnorm, n_probe_cells, adapt_margin)
+    return (_cell_topk(probes, assigned, e, k)
+            .select("query_id", "neighbor_id",
+                    F.round("cos", 6).alias("cos"), "rank"))
 
 
 @query("sim_ivf_search", oracle=_ivf_search_oracle())
@@ -1609,11 +1641,7 @@ def sim_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     this recall is exactly shortlist membership of the true top-k —
     the number the PQ_RERANK width buys (VERDICT r10 item 7: the sf1
     recall dial)."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", as_double(F.col("embedding")).alias("emb"))
     q = (e.filter(_probe_filter())
           .select(F.col("vec_id").alias("query_id"),
@@ -1692,11 +1720,7 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.70 / 0.60 at sf0.01 / sf0.1 vs 0.15 for the 10-code round-9
     form, above the whole IVF-multiprobe recall curve (0.22→0.42) —
     GROWTH_r10_pq_tiers.json carries the tier numbers."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", as_double(F.col("embedding")).alias("emb"))
     q = (e.filter(_probe_filter())
           .select(F.col("vec_id").alias("query_id"),
@@ -1943,141 +1967,6 @@ _INGEST_BATCH_SQL = f"vec_id % {INGEST_MOD} = {INGEST_REM}"
 
 
 
-class _CorpusCellIndex:
-    """The frozen coarse index as DRIVER-SIDE metadata: per-cell
-    centroid vectors and norms (and, with ``with_grid``, the PQ
-    quantization grid), collected from ONE distributed stats pass over
-    the corpus (optimization round 15, guide §1.2 step 1 / §2.4).
-
-    Why collected and not broadcast DataFrames: the index is n_cells ×
-    dim values — quantizer CONFIGURATION, bounded by the index shape
-    and never by corpus size (the same ≤-tiny-collect class as the
-    z-order histogram; a BroadcastExchange would collect the identical
-    rows to the driver anyway). Holding it as literals lets the cell
-    assignment be a pure projection (no explode, no aggregation
-    exchange, no window — see ``_ingest_assign_cells``), which at
-    100 TB removes every shuffle of the ingest batch and at bench
-    scale removes ~10 scheduled stages per query. Previously cen,
-    cnorm and the separate ``_pq_grid(corpus)`` each hung a full
-    corpus explode + aggregation under their own broadcast exchange,
-    re-aggregating the corpus up to four times per query.
-
-    Exactness: avg per (label, pos) is computed by the same
-    distributed aggregation as before; the grid's global min/max per
-    pos equal min-of-per-label-mins / max-of-per-label-maxes (exact
-    order-independent reductions); the norms sum cval² in ascending
-    pos order — the same order the exploded rows reached the old
-    per-label aggregate — in IEEE doubles, so every derived value is
-    bit-identical and the oracle contract holds.
-    """
-
-    __slots__ = ("labels", "cen", "cn", "mna", "wa", "label_dtype")
-
-    def __init__(self, corpus: DataFrame, with_grid: bool = False):
-        import math
-
-        rows = (corpus
-                .select("label", F.posexplode("emb").alias("pos0", "val"))
-                .groupBy("label", "pos0")
-                .agg(F.avg("val").alias("cval"),
-                     F.min("val").alias("mn"),
-                     F.max("val").alias("mx"))
-                .collect())
-        self.label_dtype = dict(corpus.dtypes)["label"]
-        by_label: dict = {}
-        for r in rows:
-            by_label.setdefault(r["label"], {})[r["pos0"]] = r
-        # A null cell label never equi-joined into any cell in the old
-        # relational form; the literal form has no place for it either.
-        assert None not in by_label, \
-            "null cell label in corpus index — relational join semantics " \
-            "would drop it; refusing to bake it into the literal index"
-        self.labels = sorted(by_label)
-        self.cen = {lb: [by_label[lb][p]["cval"] for p in sorted(by_label[lb])]
-                    for lb in self.labels}
-        self.cn = {lb: math.sqrt(_inorder_sum(v * v for v in self.cen[lb]))
-                   for lb in self.labels}
-        # NaN cosines (a zero-norm centroid) would order differently
-        # under the comparator sort than under the old window sort —
-        # fail loudly instead of silently diverging (cannot happen for
-        # mean vectors of non-degenerate cells).
-        assert all(c > 0 for c in self.cn.values()), \
-            "zero/NaN centroid norm in corpus index"
-        if not with_grid:
-            self.mna = self.wa = None
-            return
-        dims = sorted({p for rs in by_label.values() for p in rs})
-        self.mna = [min(by_label[lb][p]["mn"] for lb in self.labels)
-                    for p in dims]
-        self.wa = [max(max(by_label[lb][p]["mx"] for lb in self.labels)
-                       - self.mna[i], 1e-30)
-                   for i, p in enumerate(dims)]
-
-    def grid_cols(self):
-        """(mna, wa) literal array columns — the quantization grid the
-        ``_pq_bin_expr`` / ``_pq_sat_bin_expr`` encodes read."""
-        return (F.array(*[F.lit(v) for v in self.mna]),
-                F.array(*[F.lit(v) for v in self.wa]))
-
-
-def _inorder_sum(it) -> float:
-    """Left-to-right IEEE double sum — the same association order as
-    Spark's in-partition aggregate over pos-ascending exploded rows and
-    the ``dot()`` fold (double addition is order-sensitive)."""
-    acc = 0.0
-    for x in it:
-        acc = acc + x
-    return acc
-
-
-def _ingest_corpus_cells(corpus: DataFrame, with_grid: bool = False):
-    """Build the frozen coarse index (see ``_CorpusCellIndex``)."""
-    return _CorpusCellIndex(corpus, with_grid)
-
-
-def _ingest_assign_cells(vecs: DataFrame, index: _CorpusCellIndex,
-                         n_cells: int, keep: tuple = ()) -> DataFrame:
-    """Top-``n_cells`` coarse-cell assignment by cosine against the
-    frozen centroids: (vec_id, label, ccos), ties broken by label —
-    the single assignment implementation shared by the ingest and the
-    post-ingest recall/serving paths.
-
-    Optimization round 15 (guide §2.4 "remove shuffles outright"):
-    a pure PROJECTION — per-row in-order dot folds against the literal
-    centroid vectors, a comparator array_sort for the (ccos desc,
-    label asc) top-``n_cells``, one inline explode. The previous
-    relational form (posexplode → two aggregations → window) shuffled
-    |vecs| × dim exploded rows twice and sorted a window per call; at
-    100 TB the ingest batch now never shuffles at all. Arithmetic is
-    fold-order-identical: dot sums products in ascending pos order
-    (what the old per-(vec_id, label) aggregate received), vn/cn are
-    the same sqrt-of-in-order-sums, ccos the same dot / (vn * cn).
-
-    ``keep`` lists pass-through columns of ``vecs`` to carry alongside
-    the assignment — consumers that previously re-joined the
-    assignment back onto ``vecs`` on vec_id (the encode/codes columns)
-    ride the same projection instead of paying that join."""
-    vn = l2norm(F.col("emb"))
-    cands = F.array(*[
-        F.struct(
-            F.lit(lb).cast(index.label_dtype).alias("label"),
-            (dot(F.col("emb"), F.array(*[F.lit(v) for v in index.cen[lb]]))
-             / (F.col("vn") * F.lit(index.cn[lb]))).alias("ccos"))
-        for lb in index.labels])
-    top = F.slice(
-        F.array_sort(cands, lambda l, r: (
-            F.when(l["ccos"] > r["ccos"], -1)
-             .when(l["ccos"] < r["ccos"], 1)
-             .when(l["label"] < r["label"], -1)
-             .when(l["label"] > r["label"], 1)
-             .otherwise(0))),
-        1, n_cells)
-    return (vecs.withColumn("vn", vn)
-            .select("vec_id", *keep, F.explode(top).alias("s"))
-            .select("vec_id", F.col("s.label").alias("label"),
-                    F.col("s.ccos").alias("ccos"), *keep))
-
-
 def _pq_sat_bin_expr(pos: int):
     """Saturating lattice bin against the broadcast grid arrays —
     ``greatest(0, least(levels-1, floor(...)))``. The frozen grid was
@@ -2189,14 +2078,15 @@ def sim_ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
-    cen, cnorm, grid = _ingest_corpus_cells(corpus, with_grid=True)
-    assigned = _ingest_assign_cells(batch, cen, cnorm, 1).select(
+    cen, cnorm = _cell_centroids(corpus)
+    assigned = _assign_cells(batch, cen, cnorm, 1).select(
         "vec_id", F.col("label").alias("cell"),
         F.round("ccos", 6).alias("ccos"))
 
     # Saturating encode against the frozen corpus grid — see
     # _pq_sat_bin_expr; the oracle applies the identical
     # greatest/least clamps.
+    grid = _pq_grid(corpus)
     codes = _pq_sat_codes_arr()
     coded = (batch.crossJoin(F.broadcast(grid))
              .select("vec_id",
@@ -2303,47 +2193,22 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sim_ivf_recall_multiprobe`` discipline). Plan shape matches the
     ingest + search queries: broadcast centroid/assignment tables, one
     cell-pruned scored join, bounded windows."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
-    cen, cnorm = _ingest_corpus_cells(corpus)
-
-    def assign(vecs: DataFrame, n_cells: int) -> DataFrame:
-        return _ingest_assign_cells(vecs, cen, cnorm, n_cells).select(
-            "vec_id", "label")
-
-    ingested = assign(batch, 1)
+    cen, cnorm = _cell_centroids(corpus)
+    ingested = _assign_cells(batch, cen, cnorm, 1)
     idx = corpus.select("vec_id", "label", "emb").unionAll(
         batch.select("vec_id", "emb")
-             .join(ingested, "vec_id")
+             .join(ingested.select("vec_id", "label"), "vec_id")
              .select("vec_id", "label", "emb"))
 
     probes = e.filter(_probe_filter()).select("vec_id", "emb")
-    passigned = assign(probes, IVF_PROBE_CELLS)
-
-    q = (F.broadcast(probes.join(passigned, "vec_id"))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("label").alias("cell"),
-                 F.col("emb").alias("qemb"),
-                 l2norm(F.col("emb")).alias("qnrm")))
-    c = idx.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
-    scored = (
-        q.join(c, (F.col("c.label") == F.col("cell"))
-               & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine_pair(F.col("qemb"), F.col("c.emb"),
-                            F.col("qnrm"), F.col("c.nrm")).alias("cos")))
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    ivf_k = (scored.withColumn("rank", F.row_number().over(wrank))
-             .filter(F.col("rank") <= IVF_K)
-             .select("query_id", "neighbor_id"))
+    passigned = _assign_cells(probes, cen, cnorm, IVF_PROBE_CELLS)
+    hits = _cell_topk(probes, passigned, idx, IVF_K).select(
+        "query_id", F.col("neighbor_id").alias("ivf_neighbor"))
 
     qx = (e.filter(_probe_filter())
           .select(F.col("vec_id").alias("query_id"),
@@ -2356,12 +2221,11 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("cx.vec_id").alias("neighbor_id"),
                 cosine_pair(F.col("qemb"), F.col("cx.emb"),
                             F.col("qnrm"), F.col("cx.nrm")).alias("cos")))
+    wrank = Window.partitionBy("query_id").orderBy(
+        F.desc("cos"), F.asc("neighbor_id"))
     exact_k = (exact_scored.withColumn("rank", F.row_number().over(wrank))
                .filter(F.col("rank") <= IVF_K)
                .select("query_id", F.col("neighbor_id").alias("xn")))
-
-    hits = ivf_k.select("query_id",
-                        F.col("neighbor_id").alias("ivf_neighbor"))
     return (
         exact_k.join(
             hits, (exact_k.query_id == hits.query_id)
@@ -2522,10 +2386,10 @@ def _ingest_rerank_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
-    cen, cnorm, grid = _ingest_corpus_cells(corpus, with_grid=True)
-    ingested = _ingest_assign_cells(batch, cen, cnorm, 1).select(
-        "vec_id", "label")
+    cen, cnorm = _cell_centroids(corpus)
+    ingested = _assign_cells(batch, cen, cnorm, 1).select("vec_id", "label")
 
+    grid = _pq_grid(corpus)
     ccoded = _pq_coded(corpus, grid).select(
         "vec_id", "label", "emb", "codes")
     bcoded = (batch.crossJoin(F.broadcast(grid))
@@ -2541,7 +2405,7 @@ def _ingest_rerank_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _pq_codebook(coded)
     pdt = _pq_probe_d2(e, cb).select(
         F.col("vec_id").alias("query_id"), "m", "code", "d2")
-    passigned = _ingest_assign_cells(
+    passigned = _assign_cells(
         e.filter(_probe_filter()), cen, cnorm, IVF_PROBE_CELLS).select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("cell"))
 
@@ -2633,11 +2497,7 @@ def sim_ivf_incremental_rerank_recall(spark: SparkSession,
     r13 dials) — bounded above by cell membership of the true top-k,
     exactly like the corpus-side ``sim_pq_rerank_recall``. Same audit
     shape: probe-bounded exact side, |probes| × k audit join."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", as_double(F.col("embedding")).alias("emb"))
     q = (e.filter(_probe_filter())
           .select(F.col("vec_id").alias("query_id"),

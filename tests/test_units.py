@@ -1916,6 +1916,37 @@ def test_ivf_incremental_ingest_invariants(spark, sf_dir):
     assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
 
 
+def test_assign_cells_ties_rank_cut_and_margin(spark):
+    """The one cosine cell assignment every IVF query shares: an exact
+    cosine tie goes to the lower label, ``n_cells`` cuts at rank, and
+    ``adapt_margin`` keeps only cells within the margin of the best.
+    Cells 0 and 1 have identical centroids, so their ties are exact."""
+    from dask_lambda_example_spark.operators.similarity import (
+        _assign_cells, _cell_centroids)
+
+    corpus = spark.createDataFrame(
+        [(100, 0, [1.0, 0.0]), (101, 1, [1.0, 0.0]), (102, 2, [0.0, 1.0])],
+        "vec_id long, label int, emb array<double>")
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0]), (4, [3.0, 1.0])],
+        "vec_id long, emb array<double>")
+    cen, cnorm = _cell_centroids(corpus)
+
+    def cells(n_cells, adapt_margin=None):
+        out: dict = {}
+        for r in _assign_cells(vecs, cen, cnorm, n_cells,
+                               adapt_margin).collect():
+            out.setdefault(r.vec_id, set()).add(r.label)
+        return out
+
+    assert cells(1) == {1: {0}, 2: {2}, 3: {0}, 4: {0}}
+    assert cells(2) == {1: {0, 1}, 2: {0, 2}, 3: {0, 1}, 4: {0, 1}}
+    assert cells(3, 0.1) == {1: {0, 1}, 2: {2}, 3: {0, 1, 2}, 4: {0, 1}}
+    assert cells(1, 0.1) == {1: {0}, 2: {2}, 3: {0}, 4: {0}}
+    assert cells(3, 0.7) == {1: {0, 1}, 2: {2}, 3: {0, 1, 2},
+                             4: {0, 1, 2}}
+
+
 def test_ivf_incremental_recall_parity(spark, sf_dir):
     """The post-ingest multiprobe search must not degrade recall vs
     the non-incremental multiprobe index at the same tier (the frozen
